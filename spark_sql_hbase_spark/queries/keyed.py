@@ -1822,8 +1822,8 @@ def k29_batch_presplit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surface, registered z-tier for sf001-lane evidence ahead of an r12
 # promotion): the reference's headline `ns.table` SQL flow
 # (HBaseSessionCatalog.scala:63-102, README.md:47) running against the
-# manifests-as-listing layout.  The router resolves `gate.ma_sql`
-# references to the membership-aware read at dispatch time
+# manifests-as-listing layout.  The router rewrites the `gate.ma_sql`
+# relations of Spark's parsed plan to the membership-aware read
 # (sqlfront.resolve_keyed_dotted_names), so the SELECT readback proves
 # membership through the SQL surface itself: a stray parquet dropped
 # into the live generation directory makes the ORACLE comparison fail

@@ -119,8 +119,8 @@ class EngineSession:
 
             # manifest_authority: the manifests-as-listing storage layout
             # (see KeyedTableStore) — SQL routes through the store, and
-            # the router resolves dot-qualified ``ns.name`` references
-            # to the membership-aware temp views at dispatch time
+            # the router rewrites the table references of Spark's parse
+            # of each statement to the membership-aware temp views
             # (no session-catalog TABLE entry can serve a manifest
             # listing; see sqlfront.resolve_keyed_dotted_names)
             self.store = KeyedTableStore(

@@ -6882,8 +6882,8 @@ class KeyedTableStore:
             # DataSource an empty options map (sqlfront module
             # docstring), so no catalog TABLE entry can be correct
             # here.  Dot-qualified SQL still works: the session router
-            # resolves registered ``ns.name`` references to the
-            # membership-aware temp view at dispatch time
+            # rewrites each table reference of Spark's parsed plan that
+            # names a registered table to the membership-aware temp view
             # (sqlfront.resolve_keyed_dotted_names — the
             # HBaseSessionCatalog.lookupRelation seam).  Register only
             # the namespace database so SHOW DATABASES lists it.

@@ -6,16 +6,29 @@ The reference injects ``HBaseStrategies`` into the session state so that
 (``HBaseStrategies.scala:243-260`` → ``execution/InsertIntoHBaseTable.scala:
 31-123``) and CTAS becomes ``CreateHBaseTableAsSelectCommand``
 (``execution/CreateHBaseTableAsSelectCommand.scala:18-88``).  PySpark cannot
-inject Catalyst strategies, so the same dispatch happens one level up: the
-session front-end recognizes the handful of statement shapes that must hit
-the keyed store — INSERT, CREATE TABLE ... USING keyed, CTAS, DROP TABLE,
-ALTER TABLE ADD COLUMNS / SET TBLPROPERTIES, ALTER DATABASE SET
-DBPROPERTIES, and DROP DATABASE over namespaces holding *registered keyed
-tables* — and routes them through
-:class:`~spark_sql_hbase_spark.sources.keyed_parquet.KeyedTableStore`; every
-other statement — SELECT, SHOW, USE, EXPLAIN, and all DML over non-keyed
-tables — passes through to Spark untouched, exactly as the reference keeps
-the stock strategy stack for everything it doesn't override.
+inject Catalyst strategies, so the same dispatch happens one level up, on
+the same typed plan: the router parses each statement with Spark's own
+parser (``sessionState.sqlParser.parsePlan``) and swaps in the keyed
+behaviour by plan node class — ``InsertIntoStatement``, ``CreateTable`` /
+``CreateTableAsSelect`` with provider ``keyed``, ``AddColumns``,
+``SetTableProperties``, ``DeleteFromTable``, ``UpdateTable``,
+``MergeIntoTable``, ``DropTable``, ``TruncateTable``,
+``SetNamespaceProperties``, ``DropNamespace`` and ``ShowTables`` — when
+the node's target names a *registered keyed table* (or a namespace
+holding one), routing it through
+:class:`~spark_sql_hbase_spark.sources.keyed_parquet.KeyedTableStore`.
+Every other statement — SELECT, SHOW, USE, EXPLAIN, and all DML over
+non-keyed tables — passes through to Spark untouched, exactly as the
+reference keeps the stock strategy stack for everything it doesn't
+override.  Operands (targets, column lists, types, options, conditions,
+SET values, source queries) come from the parsed nodes; a source query or
+condition is the exact statement text under its node's origin span.
+
+Four statement forms are the router's own and have no Spark grammar, so
+they are matched before parsing: ``SCAN <t> PAGE n``, ``SIMILARITY
+JOIN``, ``NEAR DUPLICATES`` and ``CREATE INDEX`` — plus ``EXPLAIN`` of
+these and the bare ``SELECT COUNT(*) FROM <keyed>`` fast path, which is
+answered from metadata without a parse.
 
 Read-path note: routed writes are visible to plain ``spark.sql`` because the
 store registers every keyed table in the session catalog as an external
@@ -24,8 +37,8 @@ dot-qualified; ``SHOW DATABASES`` / ``SHOW TABLES`` list namespaces —
 reference ``HBaseSessionCatalog.scala:63-102``).  In manifest-authority
 mode no catalog TABLE can be correct (a directory scan is not the
 membership), so the router itself resolves registered ``ns.name`` — and,
-under ``USE ns``, bare table-position — references to the membership-aware
-temp views at dispatch time (:func:`resolve_keyed_dotted_names`): the same
+under ``USE ns``, bare — table references to the membership-aware temp
+views at dispatch time (:func:`resolve_keyed_dotted_names`): the same
 seam the reference's ``HBaseSessionCatalog.lookupRelation`` occupies, where
 the session's OWN catalog resolves the name before stock Spark sees it.
 
@@ -38,15 +51,17 @@ write path would bypass row-key generation regardless.  External parquet
 catalog tables (read path, full pushdown, vectorized scan) + this router
 (write path, keyed semantics) cover both halves with stock Spark.
 
-Scale: routing is string-level and driver-side O(statement length); the
-data path of every routed statement is the store's range-partitioned,
-key-sorted bulk write — no per-row driver work.
+Scale: routing costs one driver-side parse per statement (about 1 ms
+over py4j on a 4-vCPU VM) plus, in manifest-authority mode, a walk of the
+parsed plan; the data path of every routed statement is the store's
+range-partitioned, key-sorted bulk write — no per-row driver work.
 """
 
 from __future__ import annotations
 
 import re
 
+from py4j.java_gateway import get_field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,62 +70,7 @@ from spark_sql_hbase_spark.catalog import ROW_KEY, TableSpec
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][\w]*)"
 _QUALIFIED = rf"{_IDENT}(?:\s*\.\s*{_IDENT}){{0,2}}"
 
-_INSERT_RE = re.compile(
-    rf"^\s*insert\s+(?P<mode>into|overwrite)\s+(?:table\s+)?"
-    rf"(?P<target>{_QUALIFIED})\s*"
-    rf"(?P<cols>\((?:[^()]|`[^`]*`)*\)\s*)??"
-    rf"(?P<source>\(?\s*(?:values|select|with|from|table)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CREATE_RE = re.compile(
-    rf"^\s*create\s+table\s+(?P<ine>if\s+not\s+exists\s+)?"
-    rf"(?P<target>{_QUALIFIED})\s*(?P<rest>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_TRUNCATE_RE = re.compile(
-    rf"^\s*truncate\s+table\s+(?P<target>{_QUALIFIED})\s*$",
-    re.IGNORECASE,
-)
-_DROP_RE = re.compile(
-    rf"^\s*drop\s+table\s+(?P<ie>if\s+exists\s+)?(?P<target>{_QUALIFIED})\s*$",
-    re.IGNORECASE,
-)
-_ALTER_TABLE_RE = re.compile(
-    rf"^\s*alter\s+table\s+(?P<target>{_QUALIFIED})\s+(?P<rest>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ADD_COLUMNS_RE = re.compile(
-    r"^add\s+columns?\s*\((?P<body>.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_SET_TBLPROPS_RE = re.compile(
-    r"^set\s+tblproperties\s*\((?P<body>.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_ALTER_DB_RE = re.compile(
-    rf"^\s*alter\s+(?:database|schema|namespace)\s+(?P<ns>{_IDENT})\s+"
-    r"set\s+(?:dbproperties|properties)\s*\((?P<body>.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_DB_RE = re.compile(
-    rf"^\s*drop\s+(?:database|schema|namespace)\s+(?P<ie>if\s+exists\s+)?"
-    rf"(?P<ns>{_IDENT})\s*(?P<cascade>cascade|restrict)?\s*$",
-    re.IGNORECASE,
-)
-_PROP_KV_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
-_DELETE_RE = re.compile(
-    rf"^\s*delete\s+from\s+(?P<target>{_QUALIFIED})(?P<rest>\s.*)?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    rf"^\s*update\s+(?P<target>{_QUALIFIED})\s+set\s(?P<rest>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_RE = re.compile(
-    rf"^\s*merge\s+into\s+(?P<target>{_QUALIFIED})\s+using\s+"
-    rf"(?P<src>{_QUALIFIED})\s+on\s+(?P<key>`[^`]+`|[\w:]+)\s+"
-    r"when\s+matched\s+then\s+update\s+set\s+\*\s+"
-    r"when\s+not\s+matched\s+then\s+insert\s+\*\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
+# -- router-owned statement forms (no Spark grammar) -------------------------
 _CREATE_INDEX_RE = re.compile(
     rf"^\s*create\s+index\s+(?P<ine>if\s+not\s+exists\s+)?"
     rf"(?P<idx>{_QUALIFIED})\s+on\s+(?:table\s+)?(?P<target>{_QUALIFIED})\s*"
@@ -140,6 +100,69 @@ _NEARDUP_RE = re.compile(
     rf"(?:\s+method\s+(?P<method>[A-Za-z0-9_]+))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# scanner paging through the SQL surface: the reference's Scan.setLimit +
+# withStartRow pairing — SCAN <table> PAGE <n> [AFTER '<key>'].  The
+# cursor literal follows the SQL-standard doubled-quote escape, so a row
+# key containing a quote stays expressible
+_SCAN_PAGE_RE = re.compile(
+    rf"^\s*scan\s+(?P<target>{_QUALIFIED})\s+page\s+(?P<n>\d+)"
+    rf"(?:\s+after\s+'(?P<after>(?:[^']|'')*)')?\s*$",
+    re.IGNORECASE,
+)
+# bare unfiltered count — the ONE select shape served from metadata
+# (any WHERE/GROUP BY/second column/subquery goes to Spark):
+# SELECT COUNT(*|1) [AS alias] FROM <table>
+_BARE_COUNT_RE = re.compile(
+    rf"^\s*select\s+count\s*\(\s*(?:\*|1)\s*\)\s*"
+    rf"(?:as\s+(?P<alias>`[^`]+`|\w+)\s*)?"
+    rf"from\s+(?P<target>{_QUALIFIED})\s*$",
+    re.IGNORECASE,
+)
+# each form's grammar, quoted when a statement starting with its keyword
+# does not match
+_SCAN_GRAMMAR = "SCAN <table> PAGE <n> [AFTER '<last row_key>']"
+_NEARDUP_GRAMMAR = (
+    "NEAR DUPLICATES IN <table|(subquery)> ON <text_col> BY <id_col> "
+    "[THRESHOLD <t>] [SHINGLE <n>] [METHOD MINHASH|EXACT]"
+)
+_SIMJOIN_GRAMMAR = (
+    "SIMILARITY JOIN <corpus> WITH <queries|(subquery)> ON <vec_col> BY "
+    "<id_col> TOP <k> [METHOD BRUTE|SQ8|IVF|PQ|IVFADC] "
+    "[MODEL <table|(subquery)>] [BOOKS <table|(subquery)>] "
+    "[PROBES <n>] [DIM <n>] [RESIDUAL]"
+)
+_OPTION_KV_RE = re.compile(r"(\w+)\s*=\s*'([^']*)'")
+
+_EXPLAIN_RE = re.compile(
+    r"^\s*explain\s+(?:(?P<mode>formatted|extended|codegen|cost|simple)\s+)?"
+    r"(?P<rest>.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+# column clauses a keyed TableSpec has no place for: (clause, accessor)
+_CREATE_COLUMN_CLAUSES = (
+    ("COMMENT", "comment"), ("DEFAULT", "defaultValue"),
+    ("GENERATED ALWAYS AS", "generationExpression"),
+    ("IDENTITY", "identityColumnSpec"),
+)
+_ADD_COLUMN_CLAUSES = (
+    ("COMMENT", "comment"), ("DEFAULT", "default"), ("FIRST / AFTER", "position"),
+)
+_KEYED_PROVIDERS = ("keyed", "keyedtable")  # CREATE TABLE ... USING <provider>
+# parsed nodes that name a table or namespace by ``multipartIdentifier``
+_NAMED_NODES = frozenset(
+    {"UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView",
+     "UnresolvedNamespace"}
+)
+# relation parents after which ``AS <name>`` is not valid grammar (or an
+# explicit alias already exists): the statement root (``TABLE t``), an
+# alias, TABLESAMPLE (which precedes the alias slot) and command targets
+_NO_ALIAS_PARENTS = frozenset(
+    {None, "SubqueryAlias", "Sample", "CacheTable", "UncacheTable",
+     "InsertIntoStatement"}
+)
+# Spark refuses the table/namespace property keys its catalog reserves
+# (owner, location, ...); a keyed table's property bag reserves none
+_UNRESERVED = "spark.sql.legacy.notReserveProperties"
 
 
 def _split_top_level_books(blob: str) -> tuple[str, str | None]:
@@ -173,467 +196,35 @@ def _split_top_level_books(blob: str) -> tuple[str, str | None]:
     return blob, None
 
 
-# scanner paging through the SQL surface (r13 VERDICT stretch): the
-# reference's Scan.setLimit + withStartRow pairing at the same router
-# seam as SIMILARITY JOIN — SCAN <table> PAGE <n> [AFTER '<key>'].
-# The cursor literal follows the SQL-standard doubled-quote escape
-# (review fix: a row key CONTAINING a quote must be expressible, or a
-# SQL walk over such a table dies mid-walk with no way to resume)
-_SCAN_PAGE_RE = re.compile(
-    rf"^\s*scan\s+(?P<target>{_QUALIFIED})\s+page\s+(?P<n>\d+)"
-    rf"(?:\s+after\s+'(?P<after>(?:[^']|'')*)')?\s*$",
-    re.IGNORECASE,
-)
-
-# bare unfiltered count — the ONE select shape served from metadata
-# (any WHERE/GROUP BY/second column/subquery falls through to Spark):
-# SELECT COUNT(*|1) [AS alias] FROM <table>
-_BARE_COUNT_RE = re.compile(
-    rf"^\s*select\s+count\s*\(\s*(?:\*|1)\s*\)\s*"
-    rf"(?:as\s+(?P<alias>`[^`]+`|\w+)\s*)?"
-    rf"from\s+(?P<target>{_QUALIFIED})\s*$",
-    re.IGNORECASE,
-)
-_USING_KEYED_RE = re.compile(r"\busing\s+keyed(?:table)?\b", re.IGNORECASE)
-_OPTIONS_RE = re.compile(r"\boptions\s*\(", re.IGNORECASE)
-_OPTION_KV_RE = re.compile(r"(\w+)\s*=\s*'([^']*)'")
-
-# dotted reference — optionally session-catalog-qualified
-# (`spark_catalog.ns.name`, mirroring _split_qualified), not part of a
-# longer dotted chain (a three-part `othercat.ns.name` must not resolve
-# its `ns.name` tail) and not a qualified function call (`ns.fn(...)`)
-_SHOW_TABLES_RE = re.compile(
-    rf"^\s*show\s+tables(?:\s+(?:in|from)\s+(?P<ns>{_IDENT}))?\s*$",
-    re.IGNORECASE,
-)
-
-# resolver tokenization: backtick identifier | bare identifier | any
-# other single character (string literals/comments are span-masked
-# before tokens are consumed)
-_TOKEN_RE = re.compile(r"`[^`]+`|[A-Za-z_][\w]*|\S", re.DOTALL)
-
-# keywords that put the scanner in TABLE POSITION (the next identifier
-# chain is a table reference): FROM additionally opens a FROM list at
-# the current paren depth, so commas re-enter table position
-_TABLE_POS_KW = frozenset(
-    {"from", "join", "into", "table", "using", "describe", "desc"}
-)
-# clause keywords that END the FROM list at the current depth (a comma
-# after these is a select/group/order list separator, not a table ref)
-_FROM_END_KW = frozenset(
-    {
-        "where", "group", "having", "order", "limit", "window", "union",
-        "except", "intersect", "select", "qualify", "values", "set",
-        "when", "lateral", "sort", "distribute", "cluster",
-    }
-)
-# bare words after a table reference that mean NO explicit alias was
-# written (so the rewrite must append one to keep `name.col` resolving).
-# TABLESAMPLE and FOR (temporal clause) are deliberately NOT here:
-# Spark's grammar puts them BEFORE the alias, so appending `AS x` ahead
-# of them would be a parse error — the rewrite leaves those references
-# un-aliased instead (qualify columns via an explicit alias if needed)
-_NOT_AN_ALIAS_KW = _TABLE_POS_KW | _FROM_END_KW | frozenset(
-    {
-        "on", "left", "right", "inner", "outer", "full", "cross",
-        "natural", "semi", "anti", "pivot", "unpivot",
-    }
-)
+def _seq(coll) -> list:
+    """A Scala Seq of the parsed plan as a Python list."""
+    return [coll.apply(i) for i in range(coll.size())]
 
 
-def _nonsql_spans(s: str) -> list[tuple[int, int]]:
-    """Half-open spans of string literals and comments — text a name
-    resolver must never rewrite.  Handles ''-doubling and backslash
-    escapes inside quotes, ``--`` line comments and ``/* */`` blocks.
-    Backtick identifiers are NOT masked (they are names)."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if s[j] == "\\":
-                    j += 2
-                    continue
-                if s[j] == c:
-                    if j + 1 < n and s[j + 1] == c:  # doubled-quote escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, min(j + 1, n)))
-            i = min(j + 1, n)
-        elif s.startswith("--", i):
-            j = s.find("\n", i)
-            j = n if j < 0 else j
-            spans.append((i, j))
-            i = j
-        elif s.startswith("/*", i):
-            j = s.find("*/", i)
-            j = n if j < 0 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
+def _span(node) -> tuple[int, int] | None:
+    """Inclusive statement offsets a parsed node was built from."""
+    o = node.origin()
+    a, b = o.startIndex(), o.stopIndex()
+    return (a.get(), b.get()) if a.isDefined() and b.isDefined() else None
 
 
-def resolve_keyed_dotted_names(
-    stmt: str,
-    is_keyed,
-    view_of,
-    current_db: str | None = None,
-    bare_shadowed=None,
-) -> str:
-    """Session-boundary name resolution — the PySpark seam where the
-    reference's ``HBaseSessionCatalog.lookupRelation``
-    (``HBaseSessionCatalog.scala:63-102``) resolves ``ns.table``
-    through ITS catalog rather than stock Spark's: rewrite identifier
-    chains in TABLE POSITION (after FROM/JOIN/INTO/TABLE/USING/
-    DESCRIBE, and after commas inside an open FROM list) that name a
-    REGISTERED keyed table into the membership-aware temp-view name.
-    Recognized chains: ``ns.name``, ``spark_catalog.ns.name``, and —
-    with ``current_db`` — a bare ``name`` (the ``USE ns`` flow,
-    reference ``README.md:55``).  When the reference carries no
-    explicit alias, the rewrite appends ``AS `name``` so qualified
-    column references (``name.col``) keep resolving exactly as they
-    would against the catalog.  Table position is tracked by a
-    paren-depth-aware token scan, so a SELECT-list or ON-clause
-    expression like ``alias.col`` is never rewritten even when it
-    textually collides with a registered pair, and string literals /
-    comments never rewrite.  A second pass re-qualifies db-qualified
-    COLUMN references (``ns.name.col``, ``ns.name.*``) of relations the
-    first pass rewrote to the relation's alias, so every POSIX-valid
-    qualifier shape keeps resolving.  Known limit:
-    ``extract(x FROM col)``-style positions rewrite iff
-    ``current_db.col`` is itself a registered table.
-
-    Used by the router in manifest-authority mode, where a session-
-    catalog EXTERNAL table cannot exist (a directory scan would include
-    strays and miss reference-carried members, and pyspark's catalog
-    path hands a Python DataSource an empty options map — see the
-    module docstring).  The temp views read through the store's
-    membership-aware path and are re-registered on every DML, so each
-    statement resolves the CURRENT generation's manifest listing.
-    Driver-side O(statement length), zero storage ops."""
-    spans = _nonsql_spans(stmt)
-
-    # tokenize each UNMASKED segment independently — running the token
-    # regex over the whole string would let a backtick inside a string
-    # literal pair with a later real backtick and swallow everything
-    # between them as one bogus identifier token
-    class _Tok:
-        __slots__ = ("text", "a", "b")
-
-        def __init__(self, text, a, b):
-            self.text, self.a, self.b = text, a, b
-
-        def group(self, _=0):
-            return self.text
-
-        def start(self):
-            return self.a
-
-        def end(self):
-            return self.b
-
-    toks: list[_Tok] = []
-    seg_start = 0
-    for a, b in sorted(spans) + [(len(stmt), len(stmt))]:
-        for m in _TOKEN_RE.finditer(stmt, seg_start, a):
-            toks.append(_Tok(m.group(0), m.start(), m.end()))
-        seg_start = max(seg_start, b)
-
-    def kind(m) -> str:
-        t = m.group(0)
-        if t.startswith("`"):
-            return "tick"
-        if t[0].isalpha() or t[0] == "_":
-            return "word"
-        return t  # single punctuation char
-
-    edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
-    from_open = [False]  # per paren depth: inside an open FROM list?
-    expect_table = False
-    # aliasing the rewrite (`view` AS `name`) is only valid grammar in
-    # RELATION positions (FROM/JOIN/USING/comma), not after INTO/TABLE/
-    # DESCRIBE — there the bare view name stands alone
-    alias_pos = False
-    saw_merge = False
-    pairs_rewritten: set = set()
-    i = 0
-    while i < len(toks):
-        m = toks[i]
-        k = kind(m)
-        if k == "word" and m.group(0).lower() == "merge":
-            saw_merge = True
-        if k == "(":
-            from_open.append(False)
-            expect_table = False
-        elif k == ")":
-            if len(from_open) > 1:
-                from_open.pop()
-        elif k == ",":
-            expect_table = from_open[-1]
-            alias_pos = True
-        elif k == "word" and m.group(0).lower() in _TABLE_POS_KW:
-            kw = m.group(0).lower()
-            if kw == "using" and not saw_merge:
-                # USING names a table only in MERGE (JOIN's USING is
-                # followed by '(' and clears position anyway); in a
-                # fall-through CREATE ... USING <format> the next word
-                # is a datasource format, never a table reference
-                expect_table = False
-            else:
-                if kw == "from":
-                    from_open[-1] = True
-                expect_table = True
-                alias_pos = kw in ("from", "join", "using")
-        elif k == "word" and m.group(0).lower() in _FROM_END_KW:
-            from_open[-1] = False
-            expect_table = False
-        elif expect_table and k in ("word", "tick"):
-            # modifier words between the keyword and the table ref
-            # (DESCRIBE EXTENDED t, INSERT INTO TABLE IF NOT EXISTS …)
-            # keep table position open — unless the word IS a resolvable
-            # bare table or starts a dotted chain
-            if (
-                k == "word"
-                and m.group(0).lower()
-                in ("extended", "formatted", "if", "not", "exists")
-                and not (
-                    i + 1 < len(toks) and kind(toks[i + 1]) == "."
-                )
-                and not (current_db and is_keyed(current_db, m.group(0)))
-            ):
-                i += 1
-                continue
-            # consume the dotted identifier chain
-            parts = [m]
-            j = i + 1
-            while (
-                j + 1 < len(toks)
-                and kind(toks[j]) == "."
-                and kind(toks[j + 1]) in ("word", "tick")
-            ):
-                parts.append(toks[j + 1])
-                j += 2
-            nxt = toks[j] if j < len(toks) else None
-            expect_table = False
-            if nxt is not None and kind(nxt) == "(":
-                i = j  # table-valued function call, not a table ref
-                continue
-            names = [_unquote(p.group(0)) for p in parts]
-            pair = None
-            if len(names) == 1 and current_db:
-                pair = (current_db, names[0])
-            elif len(names) == 2:
-                pair = (names[0], names[1])
-            elif len(names) == 3 and names[0].lower() == "spark_catalog":
-                pair = (names[1], names[2])
-            chain_straddles_mask = any(
-                parts[0].start() < a < parts[-1].end() for a, b in spans
-            )
-            if chain_straddles_mask:
-                # a comment interposed INSIDE the dotted chain
-                # (`ns /* hint */ .name`): rewriting would delete the
-                # comment bytes, violating the never-rewrite property —
-                # leave the pathological chain untouched
-                i = j
-                continue
-            if pair is not None and is_keyed(*pair):
-                # Spark resolution precedence for BARE names: a
-                # same-name relation the caller's catalog already binds
-                # (temp view, or — manifest mode — any user-created
-                # catalog table) wins over the keyed rewrite, exactly
-                # as it would under stock Spark.  Dot-qualified chains
-                # stay router-resolved: the registry IS the authority
-                # for ``ns.name`` (the reference's lookupRelation
-                # seam).  Probed only for keyed-resolvable bare names,
-                # so the catalog round trip is never paid for ordinary
-                # identifiers.
-                if (
-                    len(names) == 1
-                    and bare_shadowed is not None
-                    and bare_shadowed(names[0])
-                ):
-                    i = j
-                    continue
-                rep = f"`{view_of(*pair)}`"
-                # no explicit alias written → append one so `name.col`
-                # qualifiers keep resolving against the rewrite
-                has_alias = nxt is not None and (
-                    kind(nxt) == "tick"
-                    or (
-                        kind(nxt) == "word"
-                        and (
-                            nxt.group(0).lower() == "as"
-                            or nxt.group(0).lower() not in _NOT_AN_ALIAS_KW
-                        )
-                    )
-                )
-                if alias_pos and not has_alias:
-                    rep += f" AS `{pair[1]}`"
-                edits.append((parts[0].start(), parts[-1].end(), rep))
-                pairs_rewritten.add(pair)
-            i = j
-            continue
-        i += 1
-
-    if not edits:
-        return stmt
-
-    # second pass: db-qualified COLUMN references (`ns.name.col`,
-    # `spark_catalog.ns.name.col`, `ns.name.*`) of relations the first
-    # pass rewrote re-qualify to the relation's alias (`name`.col) —
-    # valid POSIX statements stay valid here.  Only pairs actually
-    # rewritten as relations in THIS statement participate, so an
-    # unrelated alias.column chain can never misfire.
-    def q_edit(i0: int, n_parts: int, pair: tuple) -> None:
-        a = toks[i0].start()
-        b = toks[i0 + 2 * (n_parts - 1)].end()
-        if any(not (y <= a or b <= x) for x, y, _ in edits):
-            return  # already inside a relation rewrite
-        edits.append((a, b, f"`{pair[1]}`"))
-
-    for i0 in range(len(toks)):
-        if kind(toks[i0]) not in ("word", "tick"):
-            continue
-        if i0 > 0 and kind(toks[i0 - 1]) == ".":
-            continue  # middle of a longer chain
-        # ns . name . <col-or-*>
-        if (
-            i0 + 3 < len(toks)
-            and kind(toks[i0 + 1]) == "."
-            and kind(toks[i0 + 2]) in ("word", "tick")
-            and kind(toks[i0 + 3]) == "."
-        ):
-            pair = (
-                _unquote(toks[i0].group(0)),
-                _unquote(toks[i0 + 2].group(0)),
-            )
-            if pair in pairs_rewritten:
-                q_edit(i0, 2, pair)
-                continue
-            # spark_catalog . ns . name . <col>
-            if (
-                pair[0].lower() == "spark_catalog"
-                and i0 + 5 < len(toks)
-                and kind(toks[i0 + 4]) in ("word", "tick")
-                and kind(toks[i0 + 5]) == "."
-            ):
-                pair3 = (pair[1], _unquote(toks[i0 + 4].group(0)))
-                if pair3 in pairs_rewritten:
-                    q_edit(i0, 3, pair3)
-
-    out: list[str] = []
-    last = 0
-    for a, b, rep in sorted(edits):
-        out.append(stmt[last:a])
-        out.append(rep)
-        last = b
-    out.append(stmt[last:])
-    return "".join(out)
+def _text(stmt: str, node) -> str:
+    a, b = _span(node)
+    return stmt[a : b + 1]
 
 
-def _split_at_top_level_where(s: str) -> tuple[str, str | None]:
-    """Split ``s`` at its first TOP-LEVEL ``WHERE`` keyword — outside
-    single quotes, backticks, and parentheses — returning
-    ``(head, condition-or-None)``.  A lazy regex split is not
-    quote-aware: ``UPDATE t SET a = 'x where y'`` (no WHERE clause)
-    would hand the string interior to ``F.expr`` as a condition.
-
-    A WHERE with an EMPTY condition raises: treating it as "no WHERE"
-    would silently turn a malformed/truncated statement into a
-    full-table DELETE/UPDATE (condition "true").
-
-    String scanning matches Spark's lexer: both ``'...'`` and ``"..."``
-    are string literals, and a backslash escapes the next character
-    inside either — ``'a\\'s where b'`` is ONE literal, not a string
-    ending at the escaped quote (ADVICE r6)."""
-    in_str: str | None = None  # the open quote char, ' or "
-    in_tick = esc = False
-    depth = 0
-    for i, ch in enumerate(s):
-        if in_str is not None:
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == in_str:
-                in_str = None
-        elif in_tick:
-            in_tick = ch != "`"
-        elif ch in "'\"":
-            in_str = ch
-        elif ch == "`":
-            in_tick = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch in "wW"
-            and re.match(r"where\b", s[i:], re.IGNORECASE)
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] in "_`'\""))
-        ):
-            cond = s[i + 5 :].strip()
-            if not cond:
-                raise ValueError(
-                    "WHERE clause has no condition; omit WHERE entirely "
-                    "to target every row"
-                )
-            return s[:i].strip(), cond
-    return s.strip(), None
-
-
-def _split_sql_assignments(s: str) -> list[str]:
-    """Split a SET clause on top-level commas, respecting parentheses,
-    single-quoted strings, and backticked identifiers — NOT the
-    type-list splitter (_split_top_level_commas), whose <>-bracket
-    counting corrupts any assignment containing a comparison operator.
-    Backslash-escaped quotes and double-quoted literals scan the same
-    way as in :func:`_split_at_top_level_where`."""
-    out, depth, cur, i = [], 0, [], 0
-    in_str: str | None = None
-    in_tick = esc = False
-    while i < len(s):
-        ch = s[i]
-        if in_str is not None:
-            cur.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == in_str:
-                in_str = None
-        elif in_tick:
-            cur.append(ch)
-            if ch == "`":
-                in_tick = False
-        elif ch in "'\"":
-            in_str = ch
-            cur.append(ch)
-        elif ch == "`":
-            in_tick = True
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        out.append("".join(cur).strip())
-    return [p for p in out if p]
+def _target(node) -> list[str] | None:
+    """Name parts of the table or namespace a parsed node refers to
+    (through an alias); None for anything else (a subquery, the
+    current namespace)."""
+    kind = node.nodeName()
+    if kind == "SubqueryAlias":
+        return _target(node.child())
+    if kind == "UnresolvedIdentifier":
+        return _seq(node.nameParts())
+    if kind in _NAMED_NODES:
+        return _seq(node.multipartIdentifier())
+    return None
 
 
 def _unquote(ident: str) -> str:
@@ -641,65 +232,36 @@ def _unquote(ident: str) -> str:
     return ident[1:-1] if ident.startswith("`") and ident.endswith("`") else ident
 
 
-def _split_qualified(target: str, spark: SparkSession) -> tuple[str, str]:
-    """``[catalog.]ns.table`` → (ns, table); bare names resolve against
-    the current database (the reference's ``use pw`` flow,
-    ``README.md:55``).  A leading SESSION-catalog qualifier is dropped so
-    ``spark_catalog.pw.t`` routes identically to ``pw.t`` — otherwise a
-    3-part target would evade keyed routing and fall through to a raw
-    parquet append.  A non-session catalog qualifier is kept as part of
-    the namespace, so ``othercat.pw.t`` can never shadow the keyed
-    ``pw.t`` — it falls through to Spark's own catalog resolution."""
-    parts = [_unquote(p) for p in re.split(r"\s*\.\s*", target.strip()) if p]
-    if len(parts) == 3:
-        if parts[0].lower() == "spark_catalog":
-            parts = parts[1:]  # drop the session-catalog qualifier
-        else:
-            return f"{parts[0]}.{parts[1]}", parts[2]
-    if len(parts) == 2:
-        return parts[0], parts[1]
-    return spark.catalog.currentDatabase(), parts[0]
+def _parts(ref: str) -> list[str]:
+    """Name parts of a ``_QUALIFIED`` reference in a router-owned form."""
+    return [_unquote(p) for p in re.findall(_IDENT, ref)]
 
 
-def _split_top_level_commas(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "(<[":
-            depth += 1
-        elif ch in ")>]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return [c.strip() for c in out if c.strip()]
+def _split_qualified(parts: list[str], spark: SparkSession) -> tuple[str, str]:
+    """``[catalog.]ns.table`` name parts → (ns, table); a bare name
+    resolves against the current database (the reference's ``use pw``
+    flow, ``README.md:55``).  A leading SESSION-catalog qualifier is
+    dropped so ``spark_catalog.pw.t`` routes identically to ``pw.t``.  Any
+    other catalog qualifier stays part of the namespace, so
+    ``othercat.pw.t`` can never shadow the keyed ``pw.t`` — it falls
+    through to Spark's own catalog resolution."""
+    if len(parts) > 2 and parts[0].lower() == "spark_catalog":
+        parts = parts[1:]
+    if len(parts) == 1:
+        return spark.catalog.currentDatabase(), parts[0]
+    return ".".join(parts[:-1]), parts[-1]
 
 
-def _parse_column_defs(body: str) -> list[tuple[str, str]]:
-    cols = []
-    for item in _split_top_level_commas(body):
-        m = re.match(rf"^({_IDENT})\s+(.+)$", item, re.DOTALL)
-        if not m:
-            raise ValueError(f"cannot parse column definition: {item!r}")
-        cols.append((_unquote(m.group(1)), m.group(2).strip()))
-    return cols
-
-
-def _extract_options(text: str) -> dict[str, str]:
-    m = _OPTIONS_RE.search(text)
-    if not m:
-        return {}
-    depth, i = 1, m.end()
-    while i < len(text) and depth:
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-        i += 1
-    return dict(_OPTION_KV_RE.findall(text[m.end() : i - 1]))
+def _column(col, name: str, clauses) -> tuple[str, str]:
+    """``(name, type)`` of a parsed column definition.  A clause a keyed
+    :class:`TableSpec` has no place for raises rather than being dropped."""
+    given = [c for c, attr in clauses if getattr(col, attr)().isDefined()]
+    if not col.nullable() or given:
+        raise ValueError(
+            f"keyed column {name!r}: {(given or ['NOT NULL'])[0]} is not "
+            "supported (a keyed table spec stores a column's name and type)"
+        )
+    return name, col.dataType().simpleString()
 
 
 def _spec_from_columns(
@@ -738,87 +300,282 @@ def _spec_from_columns(
     )
 
 
+def _dot_after(chain: str, n: int) -> int:
+    """Offset of the ``n``-th name separator of a dotted identifier chain
+    (dots inside backtick-quoted parts do not separate)."""
+    seen, tick = 0, False
+    for i, c in enumerate(chain):
+        if c == "`":
+            tick = not tick
+        elif c == "." and not tick:
+            seen += 1
+            if seen == n:
+                return i
+    return len(chain)
+
+
+def resolve_keyed_dotted_names(
+    stmt: str,
+    plan,
+    is_keyed,
+    view_of,
+    current_db: str | None = None,
+    bare_shadowed=None,
+) -> str:
+    """Session-boundary name resolution — the PySpark seam where the
+    reference's ``HBaseSessionCatalog.lookupRelation``
+    (``HBaseSessionCatalog.scala:63-102``) resolves ``ns.table``
+    through ITS catalog rather than stock Spark's: rewrite each table
+    reference of ``plan`` (Spark's parse of ``stmt``) that names a
+    REGISTERED keyed table into the membership-aware temp-view name.
+
+    The references are the plan's ``UnresolvedRelation`` nodes (and the
+    ``UnresolvedTableOrView`` of DESCRIBE-style commands), found through
+    ``children``, ``innerChildren`` (CTE bodies, IN / EXISTS subqueries)
+    and an EXPLAIN's plan; each node's origin is the reference's exact
+    span, so literals, comments, column names and function names are
+    never touched.  Recognized names: ``ns.name``,
+    ``spark_catalog.ns.name`` and — with ``current_db`` — a bare
+    ``name`` (the ``USE ns`` flow, reference ``README.md:55``).  A bare
+    name ``bare_shadowed`` reports bound elsewhere (a temp view) keeps
+    Spark's resolution.  A relation written without an alias gets
+    ``AS `name``` appended so qualified column references (``name.col``)
+    keep resolving; TABLESAMPLE and command targets take none.  A
+    reference with a comment inside it is left untouched.  A second pass
+    re-qualifies db-qualified COLUMN references (``ns.name.col``,
+    ``ns.name.*``) of rewritten relations to the relation's alias.
+
+    Used by the router in manifest-authority mode, where a session-
+    catalog EXTERNAL table cannot exist (a directory scan would include
+    strays and miss reference-carried members, and pyspark's catalog
+    path hands a Python DataSource an empty options map — see the
+    module docstring).  The temp views read through the store's
+    membership-aware path and are re-registered on every DML, so each
+    statement resolves the CURRENT generation's manifest listing.
+    Driver-side walk of the parsed plan, zero storage ops."""
+    edits: dict[tuple[int, int], str] = {}
+    rewritten, nodes = set(), []
+
+    def visit(node, parent) -> None:
+        kind = node.nodeName()
+        if kind not in ("UnresolvedRelation", "UnresolvedTableOrView"):
+            nodes.append(node)
+            kids = _seq(node.children()) + _seq(node.innerChildren())
+            if kind == "ExplainCommand":
+                kids.append(node.logicalPlan())
+            for kid in kids:
+                visit(kid, kind)
+            return
+        names = _target(node)
+        if len(names) == 3 and names[0].lower() == "spark_catalog":
+            names = names[1:]
+        if len(names) == 2:
+            pair = tuple(names)
+        elif len(names) == 1 and current_db:
+            pair = (current_db, names[0])
+        else:
+            return
+        a, b = _span(node)
+        if (
+            not is_keyed(*pair)
+            or (len(names) == 1 and bare_shadowed and bare_shadowed(names[0]))
+            # rewriting a reference with a comment inside would drop it
+            or any("/*" in p or "--" in p for p in stmt[a : b + 1].split("`")[::2])
+        ):
+            return
+        alias = kind == "UnresolvedRelation" and parent not in _NO_ALIAS_PARENTS
+        edits[(a, b)] = f"`{view_of(*pair)}`" + (f" AS `{pair[1]}`" if alias else "")
+        rewritten.add(pair)
+
+    visit(plan, None)
+    # db-qualified column references (ns.name.col, ns.name.*) of a
+    # rewritten relation re-qualify to its alias
+    leaves = [
+        leaf
+        for node in (nodes if rewritten else [])
+        for expr in _seq(node.expressions())
+        for leaf in _seq(expr.collectLeaves())
+    ]
+    for leaf in leaves:
+        kind = leaf.nodeName()
+        if kind == "UnresolvedAttribute":
+            parts = _seq(leaf.nameParts())
+        elif kind == "UnresolvedStar" and leaf.target().isDefined():
+            parts = _seq(leaf.target().get()) + ["*"]
+        else:
+            continue
+        cut = 3 if len(parts) > 3 and parts[0].lower() == "spark_catalog" else 2
+        pair = tuple(parts[cut - 2 : cut])
+        if len(parts) > cut and pair in rewritten:
+            a, b = _span(leaf)
+            edits[(a, a + _dot_after(stmt[a : b + 1], cut) - 1)] = f"`{pair[1]}`"
+
+    out, last = [], 0
+    for (a, b), rep in sorted(edits.items()):
+        out += [stmt[last:a], rep]
+        last = b + 1
+    return "".join(out + [stmt[last:]])
+
+
 class KeyedSqlRouter:
-    """Dispatch SQL statements: keyed-table DML/DDL → store, rest → Spark."""
+    """Dispatch SQL statements: keyed-table DML/DDL → store, rest → Spark.
+
+    A parsed statement whose root node class is in :attr:`_TARGETS` and
+    targets a registered keyed table runs through its ``_store_<class>``
+    handler.  CREATE TABLE ... USING keyed, SHOW TABLES and the
+    namespace statements go to a ``_route_<class>`` handler that
+    decides for itself (None: not keyed).  Everything else goes to
+    Spark."""
+
+    # parsed node class → accessor of the table the statement targets
+    _TARGETS = {
+        "InsertIntoStatement": "table",
+        "AddColumns": "table",
+        "SetTableProperties": "table",
+        "DeleteFromTable": "table",
+        "UpdateTable": "table",
+        "MergeIntoTable": "targetTable",
+        "DropTable": "child",
+        "TruncateTable": "table",
+    }
 
     def __init__(self, store):
         self.store = store
         self.spark: SparkSession = store.spark
+        state = self.spark._jsparkSession.sessionState()
+        self._parser = state.sqlParser()
+        self._conf = state.conf()
+        jvm = self.spark._jvm
+        self._substitution = jvm.org.apache.spark.sql.internal.VariableSubstitution()
+        self._grammar = jvm.org.apache.spark.sql.catalyst.parser
 
     # -- helpers ----------------------------------------------------------
     def _is_keyed(self, ns: str, name: str) -> bool:
         return self.store.registry.exists(f"{ns}.{name}")
 
-    def _resolve(self, statement: str) -> str:
-        """Manifest-authority mode: resolve registered ``ns.name``
-        references to their membership-aware temp views before stock
-        Spark parses the statement (see
-        :func:`resolve_keyed_dotted_names`).  POSIX mode passes through
-        untouched — the session catalog's external tables resolve
-        dot-qualified names natively there."""
-        if not getattr(self.store, "manifest_authority", False):
-            return statement
-        try:
-            current_db = self.spark.catalog.currentDatabase()
-        except Exception:
-            current_db = None
-        return resolve_keyed_dotted_names(
-            statement,
-            self._is_keyed,
-            lambda ns, name: self.store._view_name(
-                self.store.registry.get(f"{ns}.{name}")
-            ),
-            current_db=current_db,
-            bare_shadowed=self._catalog_shadows,
-        )
+    def _keyed(self, node) -> str | None:
+        """Qualified name of the registered keyed table ``node`` names."""
+        parts = _target(node)
+        if not parts:
+            return None
+        ns, name = _split_qualified(parts, self.spark)
+        return f"{ns}.{name}" if self._is_keyed(ns, name) else None
 
-    def _source_df(self, source_sql: str) -> DataFrame:
-        src = source_sql.strip().rstrip(";").strip()
-        if re.match(r"^\(?\s*values\b", src, re.IGNORECASE):
-            return self.spark.sql(f"SELECT * FROM {src}")
-        return self.spark.sql(self._resolve(src))
+    def _done(self) -> DataFrame:
+        return self.spark.sql("SELECT 1 WHERE 1=0")  # empty result, like DDL
+
+    def _substitute(self, stmt: str) -> str:
+        """``stmt`` with its ``${var}`` references replaced, as Spark's
+        parser replaces them before it parses.  Origin offsets point into
+        this text, so the router parses, cuts and runs it rather than the
+        raw statement (substituting it again is a no-op: Spark substitutes
+        variable values recursively)."""
+        return self._substitution.substitute(stmt) if "${" in stmt else stmt
+
+    def _tokens(self, stmt: str):
+        """Spark's lexer over ``stmt``; comments and whitespace are off
+        the token channel."""
+        antlr = self.spark._jvm.org.antlr.v4.runtime
+        chars = self._grammar.UpperCaseCharStream(antlr.CharStreams.fromString(stmt))
+        return antlr.CommonTokenStream(self._grammar.SqlBaseLexer(chars))
+
+    def _parse(self, stmt: str):
+        """Spark's own parse of ``stmt``.  Spark refuses the property keys
+        its catalog reserves (``owner``, ``location``, ...) in the OPTIONS
+        or properties list of a CREATE or ALTER statement.  For such a
+        statement the check is lifted during this one parse, so it still
+        yields its node; keyed targets then read the lists with every key
+        kept (:meth:`_property_list`), and any other statement is parsed
+        again by ``spark.sql`` under the session's own setting.  The lift
+        is a session-wide conf change: another thread parsing in the same
+        session meanwhile drops reserved keys instead of refusing them."""
+        low = stmt.lower()
+        if not ("properties" in low or "options" in low) or (
+            self._tokens(stmt).LT(1).getText().lower() not in ("create", "alter")
+        ):
+            return self._parser.parsePlan(stmt)
+        prev = self._conf.getConfString(_UNRESERVED, "false")
+        self._conf.setConfString(_UNRESERVED, "true")
+        try:
+            return self._parser.parsePlan(stmt)
+        finally:
+            self._conf.setConfString(_UNRESERVED, prev)
+
+    def _property_list(self, stmt: str) -> dict[str, str]:
+        """The key/value lists of a CREATE TABLE (TBLPROPERTIES, then
+        OPTIONS, which win) or an ``ALTER ... SET`` properties statement,
+        every key kept: Spark's grammar tree of the statement, read with
+        Spark's ``AstBuilder`` (the plan node's maps lack the keys Spark
+        reserves)."""
+        build = self._grammar.AstBuilder()
+        node = self._grammar.SqlBaseParser(self._tokens(stmt))
+        node = node.singleStatement().statement()
+        if node.getClass().getSimpleName() == "CreateTableContext":
+            clauses = node.createTableClauses()
+            props = get_field(clauses, "tableProps")
+            options = get_field(clauses, "options")
+        else:
+            props, options = node.propertyList(), None
+        pairs = []
+        if props is not None:
+            pairs += _seq(build.visitPropertyKeyValues(props).toSeq())
+        if options is not None:
+            pairs += _seq(build.visitExpressionPropertyList(options).options())
+        return {t._1(): str(t._2()) for t in pairs}
+
+    def _query(self, text: str, plan=None) -> DataFrame:
+        """``spark.sql(text)``.  In manifest-authority mode registered
+        keyed names in ``text`` first resolve to their membership-aware
+        temp views (:func:`resolve_keyed_dotted_names`) on Spark's parse
+        of ``text`` (``plan`` when the caller has already substituted and
+        parsed ``text``).  POSIX mode
+        runs the text untouched — the session catalog's external tables
+        resolve dot-qualified names natively there."""
+        if self.store.manifest_authority:
+            if plan is None:
+                text = self._substitute(text)
+                plan = self._parse(text)
+            text = resolve_keyed_dotted_names(
+                text,
+                plan,
+                self._is_keyed,
+                lambda ns, name: self.store._view_name(
+                    self.store.registry.get(f"{ns}.{name}")
+                ),
+                current_db=self.spark.catalog.currentDatabase(),
+                bare_shadowed=self._catalog_shadows,
+            )
+        return self.spark.sql(text)
 
     def _conform(
-        self, df: DataFrame, spec: TableSpec, cols: str | None = None
+        self, df: DataFrame, spec: TableSpec, listed: list[str]
     ) -> DataFrame:
         """Positional column mapping, with or without an explicit row_key
         (the reference's VALUES lists always carry the key slot, which the
         generator then overrides — ``README.md:58-66``).  An explicit
-        ``(col, ...)`` list maps by the listed names instead — without it,
-        a column-list INSERT would fall through to Spark's parquet append
-        and silently bypass key generation and the key-sorted layout."""
-        if cols:
-            listed = [_unquote(c) for c in _split_top_level_commas(cols.strip()[1:-1])]
-            declared = set(spec.column_names())
-            unknown = [c for c in listed if c not in declared]
-            if unknown:
-                raise ValueError(
-                    f"INSERT column(s) {unknown} not in {spec.qualified_name} "
-                    f"schema {sorted(declared)}"
-                )
-            if len(listed) != len(df.columns):
-                raise ValueError(
-                    f"INSERT arity mismatch for {spec.qualified_name}: "
-                    f"{len(df.columns)} values for listed columns {listed}"
-                )
-            return df.toDF(*listed)
-        names = [f.name for f in spec.schema().fields]
-        if len(df.columns) == len(names):
-            return df.toDF(*names)
-        if len(df.columns) == len(names) - 1:
-            return df.toDF(*names[1:])
-        raise ValueError(
-            f"INSERT arity mismatch for {spec.qualified_name}: "
-            f"{len(df.columns)} values for columns {names}"
-        )
+        ``(col, ...)`` list maps by the listed names instead."""
+        names = listed or [f.name for f in spec.schema().fields]
+        unknown = [c for c in names if c not in spec.column_names()]
+        if unknown:
+            raise ValueError(
+                f"INSERT column(s) {unknown} not in {spec.qualified_name} "
+                f"schema {sorted(spec.column_names())}"
+            )
+        if not listed and len(df.columns) == len(names) - 1:
+            names = names[1:]
+        if len(df.columns) != len(names):
+            raise ValueError(
+                f"INSERT arity mismatch for {spec.qualified_name}: "
+                f"{len(df.columns)} values for columns {names}"
+            )
+        return df.toDF(*names)
 
     def _catalog_shadows(self, target: str) -> bool:
         """True when a catalog relation the router did NOT create
-        shadows the bare table name under Spark's resolution precedence
-        (r13 review fix, widened per r13 VERDICT item 2): the bare-name
-        fast paths serve the relation a plain ``SELECT *`` would read,
-        so they must defer to ANY same-bare-name binding the user made
-        themselves — a temp view (both storage modes), or, in
+        shadows the bare table name under Spark's resolution precedence:
+        the bare-name fast paths serve the relation a plain ``SELECT *``
+        would read, so they must defer to ANY same-bare-name binding the
+        user made themselves — a temp view (both storage modes), or, in
         manifest-authority mode, a permanent catalog table or view (the
         store owns NO session-catalog entries there, so every catalog
         hit is user-created).  In POSIX mode a non-temporary hit is the
@@ -840,15 +597,36 @@ class KeyedSqlRouter:
 
     def _rel(self, ref: str) -> DataFrame:
         """Resolve a router-form table reference — ``(subquery)`` or a
-        (possibly dot-qualified) name — through :meth:`_resolve`, so
-        keyed tables work in both storage modes and plain views/tables
-        pass straight through.  The ONE source-resolution seam shared
-        by every rewriting router form (SIMILARITY JOIN, NEAR
-        DUPLICATES) — review fix: inlined copies drift."""
+        (possibly dot-qualified) name — through :meth:`_query`, so keyed
+        tables work in both storage modes and plain views/tables pass
+        straight through.  The one source-resolution seam shared by
+        every rewriting router form (SIMILARITY JOIN, NEAR DUPLICATES)."""
         ref = ref.strip()
         if ref.startswith("("):
-            return self.spark.sql(self._resolve(ref[1:-1]))
-        return self.spark.sql(self._resolve(f"SELECT * FROM {ref}"))
+            return self._query(ref[1:-1])
+        return self._query(f"SELECT * FROM {ref}")
+
+    def _scan_page(self, m) -> DataFrame:
+        """``SCAN <table> PAGE <n> [AFTER '<key>']`` — the reference's
+        scanner-paging pairing (Scan.setLimit + withStartRow(lastKey,
+        exclusive)) surfaced in SQL: the next page of rows in key order
+        strictly after the cursor — key-bounded, so every page costs the
+        same at any depth (an OFFSET pager re-scans the prefix).  Pages
+        may close SHORT at a file-span boundary; resume from the
+        returned page's last row_key (quote it SQL-style: '' for ')."""
+        ns, name = _split_qualified(_parts(m.group("target")), self.spark)
+        if not self._is_keyed(ns, name):
+            raise ValueError(
+                f"SCAN targets a registered keyed table; {ns}.{name} "
+                "is not one (plain relations page with ordinary "
+                "SELECT ... ORDER BY ... LIMIT)"
+            )
+        after = m.group("after")
+        return self.store.scan_page(
+            f"{ns}.{name}",
+            int(m.group("n")),
+            after.replace("''", "'") if after is not None else None,
+        )
 
     def _near_duplicates(self, m) -> DataFrame:
         """``NEAR DUPLICATES`` — the dedup family's SQL surface at the
@@ -871,7 +649,7 @@ class KeyedSqlRouter:
         everything.  Both return ``(id_a, id_b, jac)`` with jac
         rounded to 4 (the shared determinism law), thresholded at
         THRESHOLD (default 0.6) over SHINGLE-gram shingles (default
-        3).  The source resolves through :meth:`_resolve`, so keyed
+        3).  The source resolves through :meth:`_rel`, so keyed
         tables work in both storage modes."""
         from spark_sql_hbase_spark.operators import dedup
 
@@ -911,18 +689,18 @@ class KeyedSqlRouter:
         :func:`~...similarity.sq8_ann_topk` — the 1-byte-code
         bandwidth tier, returns ``(query_id, neighbor_id, score,
         rank)``; DIM skips its dimension-inference scan.  METHOD IVF
-        (r12 VERDICT item 4) is cell-pruned multi-probe search
+        is cell-pruned multi-probe search
         (:func:`~...similarity.assign_cells` +
         :func:`~...similarity.multiprobe_ann_topk`): MODEL names a
         REGISTERED centroid relation — a table/view with columns
         ``(cell, cv)``, e.g. one persisted by
         :func:`~...similarity.persist_ivfpq_model` — resolved through
-        the same :meth:`_resolve` seam as the corpus (no model DDL
+        the same :meth:`_rel` seam as the corpus (no model DDL
         invented); PROBES sets nprobe (default 2).  The model rides a
         broadcast; cell assignment is row-local; the probed pairs
         multiply only the query side — the pinned IVF cost law.
 
-        All three table references resolve through :meth:`_resolve`,
+        All table references resolve through :meth:`_rel`,
         so keyed tables work in BOTH storage modes; plain temp views
         and catalog tables pass straight through.  The plan is
         whatever the operator builds — broadcast query side,
@@ -1130,412 +908,281 @@ class KeyedSqlRouter:
             "<codebooks> [PROBES <n>] [RESIDUAL])"
         )
 
-    def _explain_routed(self, stmt: str) -> DataFrame | None:
-        """``EXPLAIN [mode] <router-served statement>`` — the reference
-        inherits EXPLAIN on every statement for free because its
-        strategies live INSIDE Catalyst; the router-level forms here
-        (SIMILARITY JOIN, SCAN paging, the keyed bare-count fast path)
-        never reach Spark's parser, so EXPLAIN must be served at the
-        same seam: build the statement's ACTUAL DataFrame (the plan the
-        router would execute — for the bare count that is the
-        LocalTableScan fast path, not the catalog scan a passthrough
-        EXPLAIN would misleadingly show) and return its plan string in
-        Spark's one-column EXPLAIN shape.  Every other EXPLAIN passes
-        through untouched.  Returns None when the tail is not a
-        router-served form."""
-        em = re.match(
-            r"^\s*explain\s+(?:(?P<mode>formatted|extended|codegen|cost|"
-            r"simple)\s+)?(?P<rest>.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not em:
-            return None
-        rest = em.group("rest").strip()
-        routed = bool(
-            _SIMJOIN_RE.match(rest)
-            or _SCAN_PAGE_RE.match(rest)
-            or _NEARDUP_RE.match(rest)
-        )
-        if not routed:
-            cm = _BARE_COUNT_RE.match(rest)
-            routed = bool(cm) and self._is_keyed(
-                *_split_qualified(cm.group("target"), self.spark)
-            )
-        from spark_sql_hbase_spark.plans.pushdown import formatted_plan
 
-        mode = (em.group("mode") or "simple").lower()
-        if not routed:
-            if re.match(r"^\s*(?:scan|similarity|near)\b", rest, re.IGNORECASE):
-                # a router-owned form this method's check didn't match:
-                # dispatch it — a malformed form raises the same GUIDED
-                # grammar error plain dispatch gives (review fix: not
-                # Spark's bare ParseException), and a form sql() DOES
-                # accept is routable after all, so explain it rather
-                # than execute-and-discard (review fix: the two checks
-                # must never diverge into silent execution)
-                return self.spark.createDataFrame(
-                    [(formatted_plan(self.sql(rest), mode),)], "plan string"
-                )
+    def _router_form(self, stmt: str) -> DataFrame | None:
+        """The read statements Spark has no grammar for, and the bare
+        count answered from metadata — matched before any parse, since
+        PySpark logs every ParseException it raises at ERROR level."""
+        m = _BARE_COUNT_RE.match(stmt)
+        if m:
+            ns, name = _split_qualified(_parts(m.group("target")), self.spark)
+            if not self._is_keyed(ns, name) or self._catalog_shadows(
+                m.group("target")
+            ):
+                return None
+            # stats-from-metadata discipline (reference
+            # HBaseClientImpl.scala:298 serves table stats without a
+            # scan): the exact row count comes from parquet footers /
+            # span manifests via fast_count — zero Spark jobs, O(files)
+            # driver-side, always current-generation (post-DML) exact.
+            # Any filter, projection, or grouping fails this regex and
+            # goes to the ordinary resolved scan.  VALUES resolves to a
+            # LocalRelation, so the result is ONE LocalTableScan —
+            # executeCollect returns it without submitting any Spark job
+            # (createDataFrame would plan an RDD scan, SELECT <literal> a
+            # OneRowRelation projection; both pay a job on collect)
+            n = self.store.fast_count(f"{ns}.{name}")
+            alias = m.group("alias")
+            return self.spark.sql(f"VALUES (CAST({int(n)} AS BIGINT))").toDF(
+                _unquote(alias) if alias else "count(1)"
+            )
+
+        for regex, run, form, grammar in (
+            (_SCAN_PAGE_RE, self._scan_page, "SCAN", _SCAN_GRAMMAR),
+            (_NEARDUP_RE, self._near_duplicates, "NEAR DUPLICATES", _NEARDUP_GRAMMAR),
+            (_SIMJOIN_RE, self._similarity_join, "SIMILARITY JOIN", _SIMJOIN_GRAMMAR),
+        ):
+            m = regex.match(stmt)
+            if m:
+                return run(m)
+            if re.match(rf"^\s*{form.split()[0]}\b", stmt, re.IGNORECASE):
+                raise ValueError(f"unsupported {form} form; use {grammar}")
+        return None
+
+    def _create_index(self, m: re.Match) -> DataFrame | None:
+        ns, name = _split_qualified(_parts(m.group("target")), self.spark)
+        if not self._is_keyed(ns, name):
             return None
-        plan = formatted_plan(self.sql(rest), mode)
-        return self.spark.createDataFrame([(plan,)], "plan string")
+        ins, iname = _split_qualified(_parts(m.group("idx")), self.spark)
+        if not (m.group("ine") and self._is_keyed(ins, iname)):
+            opts = dict(_OPTION_KV_RE.findall(m.group("opts") or ""))
+            fps = opts.get("fixed_point_scale")
+            include = re.findall(r"`[^`]+`|[\w:]+", m.group("inc") or "")
+            self.store.create_covered_index(
+                f"{ns}.{name}",
+                f"{ins}.{iname}",
+                index_col=_unquote(m.group("col")),
+                include=[_unquote(c) for c in include],
+                key_width=int(opts.get("key_width", "12")),
+                fixed_point_scale=int(fps) if fps else None,
+            )
+        return self._done()
 
     # -- dispatch ---------------------------------------------------------
     def sql(self, statement: str) -> DataFrame:
         stmt = statement.strip().rstrip(";").strip()
+        em = _EXPLAIN_RE.match(stmt)
+        df = self._router_form(em.group("rest") if em else stmt)
+        if df is not None and em:
+            # EXPLAIN of a router-owned form explains the DataFrame the
+            # router builds for it (for the bare count, the LocalTableScan
+            # fast path — not the catalog scan a passthrough would show)
+            from spark_sql_hbase_spark.plans.pushdown import formatted_plan
 
-        if re.match(r"^\s*explain\b", stmt, re.IGNORECASE):
-            explained = self._explain_routed(stmt)
-            if explained is not None:
-                return explained
+            plan = formatted_plan(df, (em.group("mode") or "simple").lower())
+            return self.spark.createDataFrame([(plan,)], "plan string")
+        m = _CREATE_INDEX_RE.match(stmt) if df is None else None
+        df = self._create_index(m) if m else df
+        if df is not None:
+            return df
 
-        m = _INSERT_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                return self._insert(
-                    ns, name, m.group("source"), m.group("mode"), m.group("cols")
-                )
-        elif re.match(r"^\s*insert\b", stmt, re.IGNORECASE):
-            # INSERT-shaped but unparseable: if it targets a keyed table,
-            # fail loudly — falling through would let Spark append raw
-            # parquet to the catalog table, silently bypassing row-key
-            # generation and the key-sorted layout.
-            tm = re.match(
-                rf"^\s*insert\s+(?:into|overwrite)\s+(?:table\s+)?"
-                rf"(?P<target>{_QUALIFIED})",
-                stmt,
-                re.IGNORECASE,
-            )
-            if tm:
-                ns, name = _split_qualified(tm.group("target"), self.spark)
-                if self._is_keyed(ns, name):
+        stmt = self._substitute(stmt)
+        plan = self._parse(stmt)
+        node = plan.child() if plan.nodeName() == "UnresolvedWith" else plan
+        kind = node.nodeName()
+        if kind in self._TARGETS:
+            target = getattr(node, self._TARGETS[kind])()
+            qualified = self._keyed(target)
+            if qualified is not None:
+                if (
+                    target.nodeName() == "SubqueryAlias"
+                    and target.alias().lower() == "where"
+                ):
+                    # Spark reads a dangling WHERE as the target's alias:
+                    # `DELETE FROM t WHERE` would be an unfiltered delete
                     raise ValueError(
-                        f"unsupported INSERT form for keyed table {ns}.{name}; "
-                        "use INSERT [INTO|OVERWRITE] <table> [(cols)] "
-                        "VALUES (...) | SELECT ..."
+                        "WHERE clause has no condition; omit WHERE entirely "
+                        "to target every row"
                     )
-
-        m = _CREATE_RE.match(stmt)
-        if m:
-            rest = m.group("rest")
-            # only the DDL clause before any `AS <query>` counts — a query
-            # string merely CONTAINING the words "using keyed" must not
-            # hijack a stock-Spark CTAS
-            as_m = re.search(
-                r"\bas\b\s*(?:select|with|from|table)\b", rest, re.IGNORECASE
-            )
-            ddl_clause = rest[: as_m.start()] if as_m else rest
-            if _USING_KEYED_RE.search(ddl_clause):
-                return self._create(m)
-
-        m = _DELETE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                head, cond = _split_at_top_level_where(m.group("rest") or "")
-                if head:
-                    raise ValueError(
-                        f"unsupported DELETE clause before WHERE: {head!r}"
-                    )
-                self.store.delete_where(f"{ns}.{name}", cond or "true")
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        m = _UPDATE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                sets_clause, cond = _split_at_top_level_where(m.group("rest"))
-                sets: dict[str, str] = {}
-                for part in _split_sql_assignments(sets_clause):
-                    k, _, v = part.partition("=")
-                    if not v:
-                        raise ValueError(f"bad SET clause: {part!r}")
-                    sets[_unquote(k)] = v.strip()
-                self.store.update_where(f"{ns}.{name}", sets, cond or "true")
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        m = _MERGE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                if _unquote(m.group("key")) != ROW_KEY:
-                    raise ValueError(
-                        "MERGE over keyed tables supports ON row_key only"
-                    )
-                # the source is a bare table fragment, not a statement —
-                # resolve it directly (the position-based resolver needs
-                # a FROM/USING context a fragment doesn't carry)
-                src = m.group("src")
-                if getattr(self.store, "manifest_authority", False):
-                    sns, sname = _split_qualified(src, self.spark)
-                    if self._is_keyed(sns, sname):
-                        src = "`{}`".format(
-                            self.store._view_name(
-                                self.store.registry.get(f"{sns}.{sname}")
-                            )
-                        )
-                src_df = self.spark.table(src)
-                self.store.upsert(f"{ns}.{name}", src_df)
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-        elif re.match(r"^\s*merge\b", stmt, re.IGNORECASE):
-            tm = re.match(
-                rf"^\s*merge\s+into\s+(?P<target>{_QUALIFIED})",
-                stmt,
-                re.IGNORECASE,
-            )
-            if tm:
-                ns, name = _split_qualified(tm.group("target"), self.spark)
-                if self._is_keyed(ns, name):
-                    raise ValueError(
-                        f"unsupported MERGE form for keyed table {ns}.{name}; "
-                        "use MERGE INTO <t> USING <view> ON row_key "
-                        "WHEN MATCHED THEN UPDATE SET * "
-                        "WHEN NOT MATCHED THEN INSERT *"
-                    )
-
-        m = _BARE_COUNT_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name) and not self._catalog_shadows(
-                m.group("target")
+                getattr(self, f"_store_{kind}")(stmt, node, qualified)
+                return self._done()
+        elif hasattr(self, f"_route_{kind}"):
+            df = getattr(self, f"_route_{kind}")(stmt, node)
+            if df is not None:
+                return df
+        elif not node.children().isEmpty():
+            table = node.children().head()
+            if (
+                table.nodeName() in ("UnresolvedTable", "UnresolvedTableOrView")
+                and table.commandName().startswith("ALTER TABLE")
+                and (qualified := self._keyed(table))
             ):
-                # stats-from-metadata discipline (reference
-                # HBaseClientImpl.scala:298 serves table stats without a
-                # scan): the exact row count comes from parquet footers /
-                # span manifests via fast_count — zero Spark jobs, O(files)
-                # driver-side, always current-generation (post-DML) exact.
-                # Any filter, projection, or grouping fails this regex and
-                # falls through to the ordinary resolved scan.
-                n = self.store.fast_count(f"{ns}.{name}")
-                alias = m.group("alias")
-                col = _unquote(alias) if alias else "count(1)"
-                # VALUES resolves to a LocalRelation, so the result is
-                # ONE LocalTableScan — executeCollect returns it without
-                # submitting any Spark job (createDataFrame would plan an
-                # RDD scan, SELECT <literal> a OneRowRelation projection;
-                # both pay a job on collect)
-                return self.spark.sql(
-                    f"VALUES (CAST({int(n)} AS BIGINT))"
-                ).toDF(col)
-
-        m = _SCAN_PAGE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if not self._is_keyed(ns, name):
+                # passing it through would mutate the catalog table and
+                # desync the registry (reference alterTable /
+                # alterTableDataSchema, HBaseExternalCatalog.scala:69,72)
                 raise ValueError(
-                    f"SCAN targets a registered keyed table; {ns}.{name} "
-                    "is not one (plain relations page with ordinary "
-                    "SELECT ... ORDER BY ... LIMIT)"
+                    f"unsupported ALTER TABLE form for keyed table "
+                    f"{qualified}: {stmt!r}; supported: ADD COLUMNS "
+                    "(col type, ...) | SET TBLPROPERTIES ('k'='v', ...)"
                 )
-            # the reference's scanner-paging pairing (Scan.setLimit +
-            # withStartRow(lastKey, exclusive)) surfaced in SQL: the
-            # next page of rows in key order strictly after the cursor
-            # — key-bounded, so every page costs the same at any depth
-            # (an OFFSET pager re-scans the prefix).  Pages may close
-            # SHORT at a file-span boundary; resume from the returned
-            # page's last row_key (quote it SQL-style: '' for ').
-            after = m.group("after")
-            return self.store.scan_page(
-                f"{ns}.{name}",
-                int(m.group("n")),
-                after.replace("''", "'") if after is not None else None,
-            )
-        if re.match(r"^\s*scan\b", stmt, re.IGNORECASE):
+        return self._query(stmt, plan)
+
+    # -- statements on a keyed target: (statement, node, table name) --------
+    def _store_InsertIntoStatement(self, stmt: str, node, qualified: str) -> None:
+        partitioned = not node.partitionSpec().isEmpty() or node.ifPartitionNotExists()
+        if partitioned or node.byName():
             raise ValueError(
-                "unsupported SCAN form; use SCAN <table> PAGE <n> "
-                "[AFTER '<last row_key>']"
+                f"unsupported INSERT form for keyed table {qualified}; "
+                "use INSERT [INTO|OVERWRITE] <table> [(cols)] "
+                "VALUES (...) | SELECT ..."
             )
-
-        m = _NEARDUP_RE.match(stmt)
-        if m:
-            return self._near_duplicates(m)
-        if re.match(r"^\s*near\b", stmt, re.IGNORECASE):
-            raise ValueError(
-                "unsupported NEAR DUPLICATES form; use NEAR DUPLICATES "
-                "IN <table|(subquery)> ON <text_col> BY <id_col> "
-                "[THRESHOLD <t>] [SHINGLE <n>] [METHOD MINHASH|EXACT]"
-            )
-
-        m = _SIMJOIN_RE.match(stmt)
-        if m:
-            return self._similarity_join(m)
-        if re.match(r"^\s*similarity\b", stmt, re.IGNORECASE):
-            raise ValueError(
-                "unsupported SIMILARITY JOIN form; use SIMILARITY JOIN "
-                "<corpus> WITH <queries|(subquery)> ON <vec_col> BY "
-                "<id_col> TOP <k> [METHOD BRUTE|SQ8|IVF|PQ|IVFADC] "
-                "[MODEL <table|(subquery)>] [BOOKS <table|(subquery)>] "
-                "[PROBES <n>] [DIM <n>] [RESIDUAL]"
-            )
-
-        m = _CREATE_INDEX_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                ins, iname = _split_qualified(m.group("idx"), self.spark)
-                if m.group("ine") and self._is_keyed(ins, iname):
-                    return self.spark.sql("SELECT 1 WHERE 1=0")
-                include = [
-                    _unquote(c)
-                    for c in _split_top_level_commas(m.group("inc") or "")
-                    if c.strip()
-                ]
-                opts = dict(_OPTION_KV_RE.findall(m.group("opts") or ""))
-                fps = opts.get("fixed_point_scale")
-                self.store.create_covered_index(
-                    f"{ns}.{name}",
-                    f"{ins}.{iname}",
-                    index_col=_unquote(m.group("col")),
-                    include=include,
-                    key_width=int(opts.get("key_width", "12")),
-                    fixed_point_scale=int(fps) if fps else None,
-                )
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        m = _TRUNCATE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                self.store.truncate_table(f"{ns}.{name}")
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        m = _DROP_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                self.store.drop_table(f"{ns}.{name}")
-                return self.spark.sql("SELECT 1 WHERE 1=0")  # empty result, like DDL
-
-        m = _ALTER_TABLE_RE.match(stmt)
-        if m:
-            ns, name = _split_qualified(m.group("target"), self.spark)
-            if self._is_keyed(ns, name):
-                return self._alter_table(ns, name, m.group("rest").strip())
-
-        m = _ALTER_DB_RE.match(stmt)
-        if m:
-            ns = _unquote(m.group("ns"))
-            if ns in self.store.namespaces():
-                self.store.alter_namespace(
-                    ns, dict(_PROP_KV_RE.findall(m.group("body")))
-                )
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        m = _DROP_DB_RE.match(stmt)
-        if m:
-            ns = _unquote(m.group("ns"))
-            if self.store.registry.tables(ns):
-                # a plain-Spark DROP DATABASE ... CASCADE would drop the
-                # catalog tables while the registry and warehouse files
-                # remain — route through the store so all three stay in sync
-                cascade = (m.group("cascade") or "").lower() == "cascade"
-                self.store.drop_namespace(ns, cascade=cascade)
-                return self.spark.sql("SELECT 1 WHERE 1=0")
-
-        if getattr(self.store, "manifest_authority", False):
-            m = _SHOW_TABLES_RE.match(stmt)
-            if m:
-                # manifest mode has no catalog TABLE entries, so SHOW
-                # TABLES lists only temp views — add the registry's
-                # tables for the namespace (the listing the reference's
-                # external catalog serves, HBaseSessionCatalog.scala)
-                try:
-                    ns = (
-                        _unquote(m.group("ns"))
-                        if m.group("ns")
-                        else self.spark.catalog.currentDatabase()
-                    )
-                except Exception:
-                    ns = None
-                base = self.spark.sql(stmt)
-                if ns is None:
-                    return base
-                names = [
-                    q.split(".", 1)[1]
-                    for q in self.store.registry.tables(ns)
-                ]
-                if not names:
-                    return base
-                extra = self.spark.createDataFrame(
-                    [(ns, n, False) for n in names], base.schema
-                )
-                return base.unionByName(extra)
-
-        return self.spark.sql(self._resolve(statement))
-
-    def _alter_table(self, ns: str, name: str, rest: str) -> DataFrame:
-        """ALTER TABLE over a keyed table (reference ``alterTable`` /
-        ``alterTableDataSchema``, ``HBaseExternalCatalog.scala:69,72``).
-        Unsupported forms fail loudly: passing them through to Spark would
-        mutate the catalog parquet table and desync the registry."""
-        qualified = f"{ns}.{name}"
-        m = _ADD_COLUMNS_RE.match(rest)
-        if m:
-            cols = _parse_column_defs(m.group("body"))
-            self.store.alter_table_add_columns(qualified, cols)
-            return self.spark.sql("SELECT 1 WHERE 1=0")
-        m = _SET_TBLPROPS_RE.match(rest)
-        if m:
-            self.store.alter_table_set_properties(
-                qualified, dict(_PROP_KV_RE.findall(m.group("body")))
-            )
-            return self.spark.sql("SELECT 1 WHERE 1=0")
-        raise ValueError(
-            f"unsupported ALTER TABLE form for keyed table {qualified}: {rest!r}; "
-            "supported: ADD COLUMNS (col type, ...) | SET TBLPROPERTIES ('k'='v', ...)"
+        spec = self.store.registry.get(qualified)
+        # the source is the statement without its INSERT head: the query
+        # after it, with any WITH or FROM clause written before it
+        a, b = _span(node)
+        df = self._conform(
+            self._query(stmt[:a] + stmt[b + 1 :]), spec, _seq(node.userSpecifiedCols())
         )
-
-    def _insert(
-        self, ns: str, name: str, source: str, mode: str, cols: str | None = None
-    ) -> DataFrame:
-        spec = self.store.registry.get(f"{ns}.{name}")
-        df = self._conform(self._source_df(source), spec, cols)
         # SQL semantics: unlisted columns are NULL (the store's conform
         # select would otherwise fail on them; row_key is generator-filled)
         for f in spec.schema().fields:
             if f.name not in df.columns and f.name != ROW_KEY:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        self.store.insert(
-            f"{ns}.{name}", df, overwrite=(mode.lower() == "overwrite")
-        )
-        return self.spark.sql("SELECT 1 WHERE 1=0")
+        self.store.insert(qualified, df, overwrite=node.overwrite())
 
-    def _create(self, m: re.Match) -> DataFrame:
-        ns, name = _split_qualified(m.group("target"), self.spark)
-        rest = m.group("rest")
-        ine = bool(m.group("ine"))
+    def _store_AddColumns(self, stmt: str, node, qualified: str) -> None:
+        """Reference ``alterTableDataSchema``, ``HBaseExternalCatalog.scala:72``."""
+        cols = [
+            _column(c, c.colName(), _ADD_COLUMN_CLAUSES)
+            for c in _seq(node.columnsToAdd())
+        ]
+        self.store.alter_table_add_columns(qualified, cols)
 
-        as_m = re.search(r"\bas\b\s*(?P<query>(?:select|with|from|table)\b.*)$",
-                         rest, re.IGNORECASE | re.DOTALL)
-        # options come from the DDL clause ONLY — OPTIONS-like text inside
-        # the CTAS query (e.g. a string literal containing
-        # "options (generator='x')") must not inject into the TableSpec
-        options = _extract_options(rest[: as_m.start()] if as_m else rest)
-        if as_m:  # CTAS — CreateHBaseTableAsSelectCommand.scala:18-88
-            # the CTAS source may itself reference keyed tables
-            # dot-qualified — resolve (manifest mode) before Spark parses
-            query = self.spark.sql(self._resolve(as_m.group("query").strip()))
-            cols = [(f.name, f.dataType.simpleString()) for f in query.schema.fields]
-            spec = _spec_from_columns(ns, name, cols, options)
-            # conform bare names to the spec's cf-qualified layout (by name,
-            # never position — the key column may sit anywhere)
-            query = query.select(
-                *[
-                    F.col(f"`{c}`").alias(
-                        c if (c == ROW_KEY or ":" in c) else f"cf:{c}"
-                    )
-                    for c in query.columns
-                ]
+    def _store_SetTableProperties(self, stmt: str, node, qualified: str) -> None:
+        """Reference ``alterTable``, ``HBaseExternalCatalog.scala:69``."""
+        self.store.alter_table_set_properties(qualified, self._property_list(stmt))
+
+    def _store_DeleteFromTable(self, stmt: str, node, qualified: str) -> None:
+        cond = node.condition()  # no WHERE: Spark's shared `true` literal
+        bare = cond.nodeName() == "Literal" and cond.toString() == "true"
+        self.store.delete_where(qualified, "true" if bare else _text(stmt, cond))
+
+    def _store_UpdateTable(self, stmt: str, node, qualified: str) -> None:
+        sets = {
+            ".".join(_seq(a.key().nameParts())): _text(stmt, a.value())
+            for a in _seq(node.assignments())
+        }
+        cond = node.condition()
+        where = _text(stmt, cond.get()) if cond.isDefined() else "true"
+        self.store.update_where(qualified, sets, where)
+
+    def _store_MergeIntoTable(self, stmt: str, node, qualified: str) -> None:
+        clauses = (node.matchedActions(), node.notMatchedActions(),
+                   node.notMatchedBySourceActions())
+        shape = [[(a.nodeName(), a.condition().isDefined()) for a in _seq(c)]
+                 for c in clauses]
+        if shape != [[("UpdateStarAction", False)], [("InsertStarAction", False)], []]:
+            raise ValueError(
+                f"unsupported MERGE form for keyed table {qualified}; "
+                "use MERGE INTO <t> USING <source> ON row_key "
+                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
             )
-            self.store.ctas(spec, query, mode="ignore" if ine else "error")
-        else:
-            body_m = re.match(r"^\((?P<body>.*?)\)\s*(using|options|$)", rest,
-                              re.IGNORECASE | re.DOTALL)
-            if not body_m:
-                raise ValueError(f"cannot parse CREATE TABLE statement: {rest!r}")
-            cols = _parse_column_defs(body_m.group("body"))
-            spec = _spec_from_columns(ns, name, cols, options)
-            self.store.create_table(spec, ignore_if_exists=ine)
-        return self.spark.sql("SELECT 1 WHERE 1=0")
+        on = node.mergeCondition()
+        if on.nodeName() != "UnresolvedAttribute" or _seq(on.nameParts()) != [ROW_KEY]:
+            raise ValueError("MERGE over keyed tables supports ON row_key only")
+        src = node.sourceTable()  # a relation or subquery, maybe aliased
+        if src.nodeName() == "SubqueryAlias":
+            src = src.child()  # (an alias node's origin is the whole MERGE)
+        self.store.upsert(qualified, self._query(f"SELECT * FROM ({_text(stmt, src)})"))
+
+    def _store_DropTable(self, stmt: str, node, qualified: str) -> None:
+        self.store.drop_table(qualified)
+
+    def _store_TruncateTable(self, stmt: str, node, qualified: str) -> None:
+        self.store.truncate_table(qualified)
+
+    # -- statements that decide for themselves: (statement, node) → result --
+    def _route_CreateTable(self, stmt: str, node) -> DataFrame | None:
+        clauses = node.tableSpec()
+        provider = clauses.provider()
+        if not provider.isDefined() or provider.get().lower() not in _KEYED_PROVIDERS:
+            return None
+        ns, name = _split_qualified(_target(node.name()), self.spark)
+        for clause, given in (
+            ("PARTITIONED BY / CLUSTER BY", not node.partitioning().isEmpty()),
+            ("LOCATION", clauses.location().isDefined()),
+            ("COMMENT", clauses.comment().isDefined()),
+        ):
+            if given:
+                raise ValueError(
+                    f"CREATE TABLE {ns}.{name} USING keyed: {clause} is not "
+                    "supported (the store owns a keyed table's layout, "
+                    "location and metadata)"
+                )
+        options = self._property_list(stmt)
+        ine = node.ignoreIfExists()
+        if node.nodeName() == "CreateTable":
+            cols = [
+                _column(c, c.name(), _CREATE_COLUMN_CLAUSES)
+                for c in _seq(node.columns())
+            ]
+            if not cols:
+                raise ValueError(
+                    f"CREATE TABLE {ns}.{name} USING keyed needs a column "
+                    "list or AS <query>"
+                )
+            self.store.create_table(
+                _spec_from_columns(ns, name, cols, options), ignore_if_exists=ine
+            )
+            return self._done()
+        # CTAS — CreateHBaseTableAsSelectCommand.scala:18-88
+        query = self._query(_text(stmt, node.query()))
+        cols = [(f.name, f.dataType.simpleString()) for f in query.schema.fields]
+        # conform bare names to the spec's cf-qualified layout (by name,
+        # never position — the key column may sit anywhere)
+        query = query.select(
+            *[
+                F.col(f"`{c}`").alias(c if (c == ROW_KEY or ":" in c) else f"cf:{c}")
+                for c in query.columns
+            ]
+        )
+        self.store.ctas(
+            _spec_from_columns(ns, name, cols, options),
+            query,
+            mode="ignore" if ine else "error",
+        )
+        return self._done()
+
+    _route_CreateTableAsSelect = _route_CreateTable
+
+    def _route_SetNamespaceProperties(self, stmt: str, node) -> DataFrame | None:
+        ns = ".".join(_target(node.namespace()))
+        if ns not in self.store.namespaces():
+            return None
+        self.store.alter_namespace(ns, self._property_list(stmt))
+        return self._done()
+
+    def _route_DropNamespace(self, stmt: str, node) -> DataFrame | None:
+        ns = ".".join(_target(node.namespace()))
+        if not self.store.registry.tables(ns):
+            return None
+        # a plain-Spark DROP DATABASE ... CASCADE would drop the catalog
+        # tables while the registry and warehouse files remain — route
+        # through the store so all three stay in sync
+        self.store.drop_namespace(ns, cascade=node.cascade())
+        return self._done()
+
+    def _route_ShowTables(self, stmt: str, node) -> DataFrame | None:
+        """Manifest mode has no catalog TABLE entries, so SHOW TABLES
+        lists only temp views — add the registry's tables for the
+        namespace (the listing the reference's external catalog serves,
+        ``HBaseSessionCatalog.scala``)."""
+        if not self.store.manifest_authority or node.pattern().isDefined():
+            return None
+        parts = _target(node.namespace())
+        ns = ".".join(parts) if parts else self.spark.catalog.currentDatabase()
+        base = self.spark.sql(stmt)
+        rows = [(ns, q.split(".", 1)[1], False) for q in self.store.registry.tables(ns)]
+        if not rows:
+            return base
+        return base.unionByName(self.spark.createDataFrame(rows, base.schema))

@@ -393,6 +393,27 @@ def test_sql_create_options_enable_blooms(store):
     )
     assert _sidecars(store, "bl.t10")
     assert store.get("bl.t10", ["b"]).collect()[0]["cf:v"] == 2
+    # every spelling Spark's grammar accepts lands in the same bag
+    for t, clause in [
+        ("bl.t10a", "OPTIONS (bloomfilter 'ROW')"),
+        ("bl.t10b", 'OPTIONS (bloomfilter="ROW")'),
+        ("bl.t10c", "TBLPROPERTIES ('bloomfilter'='ROW')"),
+    ]:
+        router.sql(
+            f"CREATE TABLE {t} (row_key string, `cf:v` int) USING keyed {clause}"
+        )
+        assert store.registry.get(t).properties["bloomfilter"] == "ROW", clause
+        router.sql(f"INSERT INTO {t} VALUES ('a', 1), ('b', 2), ('z', 26)")
+        assert _sidecars(store, t), clause
+    # a key Spark reserves for its own catalog is kept beside a properties
+    # clause too
+    router.sql(
+        "CREATE TABLE bl.t10d (row_key string, `cf:v` int) USING keyed "
+        "OPTIONS (bloomfilter 'ROW', owner 'x') TBLPROPERTIES ('ttl'='7d')"
+    )
+    assert store.registry.get("bl.t10d").properties == {
+        "bloomfilter": "ROW", "owner": "x", "ttl": "7d",
+    }
 
 
 # -- review regressions ----------------------------------------------------

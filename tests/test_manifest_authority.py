@@ -554,9 +554,9 @@ def test_datasource_missing_manifest_member_fails_loudly(store, spark):
 def test_dot_qualified_sql_select_insert_readback(spark, tmp_path_factory):
     """The reference's headline flow (`SELECT/INSERT ... ns.name`,
     HBaseSessionCatalog.scala:63-102, README.md:47) must work in the
-    100 TB layout: the session router resolves registered dot-qualified
-    names to the membership-aware read at dispatch time
-    (sqlfront.resolve_keyed_dotted_names), so SELECT sees manifest
+    100 TB layout: the session router rewrites the relations of Spark's
+    parsed plan that name a registered table to the membership-aware
+    read (sqlfront.resolve_keyed_dotted_names), so SELECT sees manifest
     membership — strays ignored, reference-carried members resolved —
     and INSERT routes through the store."""
     from spark_sql_hbase_spark.session import EngineSession

@@ -2582,11 +2582,12 @@ def test_versioned_cell_replication_converges(spark, tmp_path_factory, ops):
 
 # -- manifest-mode name resolution (sqlfront.resolve_keyed_dotted_names) --
 #
-# The resolver is a quote/comment-aware string rewrite on the session's
-# SQL dispatch path; a bug here either corrupts a statement (rewriting
-# inside a literal) or silently fails to resolve (missing an identifier
-# position).  Properties: (1) literal/comment content is BYTE-IDENTICAL
-# through the resolver no matter what table-like names it contains;
+# The resolver rewrites, on the session's SQL dispatch path, the table
+# references of Spark's parse of the statement; a bug here either
+# corrupts a statement (rewriting inside a literal) or silently fails to
+# resolve (missing a table reference).  Properties: (1) literal/comment
+# content is BYTE-IDENTICAL through the resolver no matter what
+# table-like names it contains;
 # (2) every dotted identifier-position reference to a registered pair
 # resolves; (3) non-registered pairs never rewrite.
 
@@ -2610,10 +2611,22 @@ def resolver_case(draw):
     return ns, tbl, other_ns, lit
 
 
+def _resolver(spark):
+    """The resolver over Spark's parse of the statement it rewrites."""
+    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
+
+    parse = spark._jsparkSession.sessionState().sqlParser().parsePlan
+
+    def resolve(stmt, *args, **kwargs):
+        return resolve_keyed_dotted_names(stmt, parse(stmt), *args, **kwargs)
+
+    return resolve
+
+
 @settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
 @given(resolver_case())
-def test_resolver_rewrites_identifiers_never_literals(case):
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
+def test_resolver_rewrites_identifiers_never_literals(spark, case):
+    resolve_keyed_dotted_names = _resolver(spark)
 
     ns, tbl, other_ns, lit = case
     registered = {(ns, tbl)}
@@ -2644,8 +2657,8 @@ def test_resolver_rewrites_identifiers_never_literals(case):
     assert f"WHERE y = `{tbl}`.y" in out
 
 
-def test_resolver_table_position_only():
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
+def test_resolver_table_position_only(spark):
+    resolve_keyed_dotted_names = _resolver(spark)
 
     is_keyed = lambda a, b: (a, b) in {("ma", "dq"), ("ma", "t2")}
     view = lambda a, b: f"{a}__{b}"
@@ -2752,8 +2765,8 @@ def test_resolver_table_position_only():
     assert out == "SELECT ma.t2.v FROM `ma__dq` AS `dq`"
 
 
-def test_resolver_bare_name_needs_table_position():
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
+def test_resolver_bare_name_needs_table_position(spark):
+    resolve_keyed_dotted_names = _resolver(spark)
 
     out = resolve_keyed_dotted_names(
         "SELECT t FROM t WHERE t > 0 AND f(t) = t",

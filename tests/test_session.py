@@ -273,6 +273,13 @@ def test_sql_alter_table_set_tblproperties(sql_session):
         "owner": "gate",
         "ttl": "7d",
     }
+    # every spelling Spark's grammar accepts: double-quoted pairs, a bare
+    # key without '=', and a key Spark reserves for its own catalog
+    sess.sql("ALTER TABLE pw.tp SET TBLPROPERTIES (\"ttl\"=\"7d\", owner 'x')")
+    assert sess.store.registry.get("pw.tp").properties == {
+        "owner": "x",
+        "ttl": "7d",
+    }
 
 
 def test_sql_alter_table_unsupported_form_fails_loudly(sql_session):
@@ -339,9 +346,95 @@ def test_sql_non_session_catalog_target_not_keyed_routed(sql_session):
 
     sess = sql_session
     sess.sql("CREATE TABLE pw.nc (row_key string, `cf:v` string) USING keyed")
-    ns, name = _split_qualified("othercat.pw.nc", sess.spark)
+    ns, name = _split_qualified(["othercat", "pw", "nc"], sess.spark)
     assert (ns, name) == ("othercat.pw", "nc")
     assert not sess.store.registry.exists(f"{ns}.{name}")
+
+
+def test_sql_leading_comment_still_routes_to_store(sql_session):
+    """A comment before the statement must not bypass keyed routing: the
+    INSERT takes its key from the generator and leaves every live file
+    with its span record and Bloom sidecar (a passthrough would append a
+    raw parquet file keeping the supplied key), and the DELETE runs
+    through the store (Spark cannot delete from the catalog table)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from spark_sql_hbase_spark.sources import bloom
+
+    sess = sql_session
+    store = sess.store
+    sess.sql(
+        "CREATE TABLE pw.lc (row_key string, `cf:v` string) "
+        "USING keyed OPTIONS (generator='sequence', bloomfilter='ROW')"
+    )
+    sess.sql("INSERT INTO pw.lc VALUES ('x', 'a')")
+    sess.sql("/* c */ INSERT INTO pw.lc VALUES ('zz-manual', 'b')")
+    rows = sorted((r.row_key, r["cf:v"]) for r in store.read("pw.lc").collect())
+    assert rows == [("0001", "a"), ("0002", "b")]
+    path = store.table_path(store.registry.get("pw.lc"))
+    files = store._data_files(path)
+    spans = store._load_span_stats(path)
+    blooms = set(os.listdir(os.path.join(path, bloom.BLOOM_DIR)))
+    # every non-empty live file has its span record and Bloom sidecar
+    # (the empty file CREATE writes carries neither)
+    live = [f for f in files if pq.read_metadata(os.path.join(path, f)).num_rows]
+    assert len(live) == 2
+    assert all(f in spans and f + ".bf" in blooms for f in live)
+    assert store.fast_count("pw.lc") == store.read("pw.lc").count() == 2
+    sess.sql("-- c\nDELETE FROM pw.lc WHERE `cf:v` = 'a'")
+    assert [r.row_key for r in store.read("pw.lc").collect()] == ["0002"]
+
+
+def test_sql_variable_reference_keeps_condition_intact(sql_session):
+    """Spark replaces ${var} references before it parses, so a condition
+    or SET value is cut from the substituted text: a reference written
+    before it must not shift the cut (here ${x} is unset, so it reads
+    as '' and the raw text is 4 characters longer)."""
+    sess = sql_session
+    sess.spark.conf.unset("x")
+    sess.sql(
+        "CREATE TABLE pw.vs (row_key string, `cf:note` string, `cf:v` long) "
+        "USING keyed"
+    )
+    sess.sql(
+        "INSERT INTO pw.vs VALUES ('a', 'keep', 3), ('b', 'keep', 20000), "
+        "('c', '', 5), ('d', 'keep', 4)"
+    )
+    sess.sql("DELETE FROM pw.vs WHERE `cf:note` = '${x}' OR `cf:v` > 10000")
+    sess.sql(
+        "UPDATE pw.vs SET `cf:v` = 9 WHERE `cf:note` = 'keep${x}' AND `cf:v` < 4"
+    )
+    rows = sess.store.read("pw.vs").collect()
+    assert sorted((r.row_key, r["cf:v"]) for r in rows) == [("a", 9), ("d", 4)]
+
+
+@pytest.mark.parametrize(
+    "clause, ddl",
+    [
+        ("PARTITIONED BY", "(row_key string, `cf:v` string) USING keyed "
+                           "PARTITIONED BY (`cf:v`)"),
+        ("LOCATION", "(row_key string, `cf:v` string) USING keyed "
+                     "LOCATION '/tmp/elsewhere'"),
+        ("COMMENT", "(row_key string, `cf:v` string) USING keyed "
+                    "COMMENT 'a table'"),
+        ("NOT NULL", "(row_key string NOT NULL, `cf:v` string) USING keyed"),
+        ("DEFAULT", "(row_key string, `cf:v` string DEFAULT 'x') USING keyed"),
+        ("COMMENT", "(row_key string, `cf:v` string COMMENT 'a, b') "
+                    "USING keyed"),
+    ],
+)
+def test_sql_create_refuses_clauses_a_keyed_spec_cannot_hold(
+    spark, tmp_path, clause, ddl
+):
+    """A CREATE clause a keyed TableSpec has no place for refuses by
+    name: silently ignoring it (LOCATION writing under the warehouse
+    anyway) is worse than a refusal."""
+    sess = EngineSession(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match=clause):
+        sess.sql(f"CREATE TABLE pw.rc {ddl}")
+    assert not sess.store.registry.exists("pw.rc")
 
 
 def test_sql_create_index_routes_to_covered_index(spark, tmp_path):
@@ -587,6 +680,7 @@ def test_sql_dangling_where_raises_not_full_table_dml(spark, tmp_path):
     """Review fix: 'DELETE FROM t WHERE' (condition lost/truncated) must
     raise — treating it as no-WHERE would silently delete every row."""
     import pytest
+    from pyspark.errors import ParseException
 
     from spark_sql_hbase_spark.session import EngineSession
 
@@ -598,7 +692,7 @@ def test_sql_dangling_where_raises_not_full_table_dml(spark, tmp_path):
     sess.sql("INSERT INTO dw.t SELECT * FROM __dw_base")
     with pytest.raises(ValueError, match="no condition"):
         sess.sql("DELETE FROM dw.t WHERE")
-    with pytest.raises(ValueError, match="no condition"):
+    with pytest.raises(ParseException):
         sess.sql("UPDATE dw.t SET `c:v` = 0 WHERE")
     assert sess.store.read("dw.t").count() == 2
 
@@ -716,6 +810,23 @@ def test_sql_bare_count_routes_to_fast_count(spark, tmp_path):
         "pw.test", pw_test_df(spark), overwrite=True, generate_row_key=False
     )
     expect = sess.store.read("pw.test").count()
+
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the bare count submits no Spark job; a routed point SELECT submits
+    # exactly the jobs Spark's own plan for the same text does
+    assert jobs("fc_count", lambda: sess.sql("SELECT COUNT(*) FROM pw.test")) == 0
+    point = "SELECT * FROM pw.test WHERE row_key = '0042'"
+    spark_jobs = jobs("fc_point_spark", lambda: spark.sql(point))
+    assert jobs("fc_point_routed", lambda: sess.sql(point)) == spark_jobs
 
     df = sess.sql("SELECT COUNT(*) FROM pw.test")
     plan = formatted_plan(df)
